@@ -24,38 +24,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r17 (ADVICE): the triangle lane's broadcast-adjacency plan
-      // collects up to 50 M-element adjacency rows (~400 MB raw, more
-      // serialized) through TWO broadcast exchanges; the 1 g default
-      // would abort near the threshold instead of degrading to the
-      // shuffle plan. 8 g comfortably exceeds the worst case on this
-      // 48 g heap.
-      .config("spark.driver.maxResultSize", "8g")
-      // r17 (VERDICT r16 ask 4, measured by tools/FanoutAB on a clean
-      // box): mid-size derived-table scans (DocTerms ≈ 100–200 MB at
-      // sf1) pack into 1–2 splits at the default 128 MB, idling 30 of
-      // 32 cores on exactly the scan stages a degraded disk hurts most.
-      // 32 MB fans them out 4–8× at negligible small-file cost
-      // (openCost packing still applies): sf1 cold q_bmw 191→82 s,
-      // q_wand 34→14 s, q_bm25_pruned 15→7 s — and the 32 MB samples'
-      // run-to-run spread collapses (0.01–0.3 s vs 16–29 s), which is
-      // the latency-sensitivity story SCALE.md's r16 note predicted.
-      .config("spark.sql.files.maxPartitionBytes", "33554432")
-      // static conf: the 100-entry default codegen cache recompiles
-      // stage-rich lanes every execution (r17; see build.sbt)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // keep codegen class names stable across AQE stage renumbering
-      // so repeat executions hit the codegen cache (r17; see build.sbt)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietKnownNoise()
+    val cpus = Session.cpus
+    val spark = Session.get(cpus)
     // r16 — the gate diagnoses ITSELF (VERDICT r15 asks 1 and 7): three
     // rounds of sf0.1 gate degradation were argued from inference
     // because the degraded runs carried no telemetry. Now:
@@ -234,24 +204,7 @@ object Bench {
       * independently — accumulated blocks turn the tail of the run into a
       * GC benchmark instead of a query benchmark. */
     def cleanup(): Unit = {
-      spark.catalog.clearCache()
-      // releaseAll is the library caller's teardown (clears the operator
-      // cache registry); the getPersistentRDDs sweep below then catches
-      // anything persisted outside the registry (e.g. localCheckpoints)
-      graft.operators.OpCaches.releaseAll()
-      // blocking=true (r15): an async unpersist lets block removal
-      // bleed into the NEXT timed run — under box pressure that is
-      // exactly the kind of cross-run state the gate's warm-inversion
-      // guard exists to catch. Teardown cost belongs to cleanup(),
-      // which is outside every timed window.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // r16: reclaim loop-checkpoint files too — nothing from a
-      // finished run is ever read again (each run builds fresh
-      // DataFrames), and 480 runs' accumulated generations otherwise
-      // share the local disk + page cache with every later run's
-      // shuffles (VERDICT r15's q_pagerank warm>cold suspect #1)
-      graft.operators.Ckpt.clearAll(spark)
+      Session.release(spark)
       // Spark's ContextCleaner reclaims dead broadcasts/shuffles/RDD blocks
       // only when the JVM GCs their weak references. 126 query runs in one
       // JVM without explicit GC let that debris pile up, so late-running
@@ -369,11 +322,7 @@ object Bench {
             true
           } catch { case _: Throwable => false }
           val secs = (System.nanoTime() - r0) / 1e9
-          spark.catalog.clearCache()
-          graft.operators.OpCaches.releaseAll()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-          graft.operators.Ckpt.clearAll(spark)
+          Session.release(spark)
           nRuns += 1
           if (nRuns % 48 == 0) System.gc()
           if (ok) secs else -secs
@@ -738,11 +687,12 @@ object Bench {
         s""""${esc(k)}":$v,"attributed":"${attributed(k, diagMeta(k))}"}"""
       }.mkString("{", ",", "}")
     val detail = s"""{"metric":"total_cold","value":${t3(total)},"unit":"sec","queries_cold":$coldJson,"queries_warm":$warmJson,"build_cold":$buildColdJson,"build_warm":$buildWarmJson,"errors":$errors,"skipped":$skipJson,"warm_inversions":$invJson,"sentinel":$sentinelJson,"sentinel_io":$sentinelIoJson,"rerun":$rerunJson,"code_cache_mb":$ccJson,"diagnostics":$diagJson,"prewarm":$prewarmJson,"sf":"$sfDir","cpus":$cpus}"""
-    try {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_detail.json"),
-        detail.getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    // the per-cpus copy keeps each pass's detail when one box runs the
+    // catalog at several core counts (the default path is overwritten)
+    Seq("bench_detail.json", s"bench_detail_c$cpus.json").foreach { f =>
+      try java.nio.file.Files.write(java.nio.file.Paths.get(f), detail.getBytes("UTF-8"))
+      catch { case _: Throwable => () }
+    }
 
     spark.stop()
     // contract line: LAST line of stdout, bare JSON, compact. The driver

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,27 +8,7 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // headroom for the broadcast-adjacency triangle plan's collected
-      // relations near the 50 M-element bound (ADVICE r16; see Bench)
-      .config("spark.driver.maxResultSize", "8g")
-      // 32 MB scan splits (r17, measured A/B — see Bench): fans
-      // mid-size derived-table scans across the cores
-      .config("spark.sql.files.maxPartitionBytes", "33554432")
-      // static conf: the 100-entry default codegen cache recompiles
-      // stage-rich lanes every execution (r17; see build.sbt)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // keep codegen class names stable across AQE stage renumbering
-      // so repeat executions hit the codegen cache (r17; see build.sbt)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietKnownNoise()
+    val spark = Session.get()
     new java.io.File(outDir).mkdirs()
     // box-state bounds for the correctness run too (VERDICT r16 ask 7):
     // the verify pass is the same long-lived JVM shape as the bench, so
@@ -59,18 +38,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // between-queries teardown, in Bench's order (r17, ADVICE): first
-      // release operator caches and unpersist anything still pinned —
-      // a persisted frame whose lineage reads a checkpoint parquet
-      // becomes unrecomputable once that file is deleted — THEN reclaim
-      // the loop-checkpoint files (nothing from a finished query is
-      // read again; 240 queries in one JVM otherwise accumulate every
-      // iterative lane's generations on the disk the remaining queries
-      // shuffle on).
-      operators.OpCaches.releaseAll()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      operators.Ckpt.clearAll(spark)
+      Session.release(spark)
     }
     sentinelPoint("late")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -375,8 +375,8 @@ object HybridSearch {
 
   /** [[maxScoreAudit]] served from a prebuilt impact-ranked postings
     * table (the materialized [[rankedTable]]) — identical algebra and
-    * output, no inline weight pass (WandSpec pins equality with the tf
-    * form). `tf` still supplies the broadcast probe set and per-term
+    * output, no inline weight pass (HybridSearchSpec pins equality with
+    * the tf form). `tf` still supplies the broadcast probe set and per-term
     * df. The scan is pinned once per execution ([[pinScan]]): the
     * parts feed 4–5 subtrees, and at sf10 five disk scans of the
     * postings table cost more than one scan + cached reads (measured:
@@ -497,8 +497,8 @@ object HybridSearch {
   /** [[blockMaxAudit]] served from a prebuilt impact-ranked postings
     * table (the materialized [[rankedTable]]) — identical algebra and
     * output, no inline weight pass; the scan is pinned once per
-    * execution (see [[maxScoreAuditFromRanked]]). WandSpec pins
-    * equality with the tf form. */
+    * execution (see [[maxScoreAuditFromRanked]]). HybridSearchSpec
+    * pins equality with the tf form. */
   def blockMaxAuditFromRanked(ranked: DataFrame, tf: DataFrame, k: Int,
                               mSeed: Int, blockSize: Int): DataFrame = {
     val r = pinScan(ranked)

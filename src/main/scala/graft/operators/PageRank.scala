@@ -93,7 +93,7 @@ object PageRank {
     * (InMemoryRelation preserves both partitioning and ordering), so
     * per-iteration movement drops to the small ranks side + the
     * map-side-combined contribution aggregation. Measured sf10
-    * (QueryTime, settled runs): 142.3 s → see SCALE.md r18 table.
+    * (settled runs): 142.3 s → see SCALE.md r18 table.
     * Values unchanged — partitioning never affects the exact integer
     * arithmetic (PageRankSpec pins the forms equal). */
   private def pinnedBySrc(trans: DataFrame): DataFrame = {

@@ -200,7 +200,7 @@ object Triangles {
     * joins. WHY THIS IS THE LEVER (r16, measured): the merge plan's
     * dominant cost is not the intersections — it is the JOINS carrying
     * a full neighbor array on every edge row: Σ_(u,v) (d⁺u + d⁺v)
-    * longs of shuffle payload (GraphStatsProbe: 1.33 B longs ≈ 10.6 GB
+    * longs of shuffle payload (SCALE.md r16: 1.33 B longs ≈ 10.6 GB
     * at sf1 for 411 M comparisons — the 80 s close stage). The
     * adjacency TABLE is tiny by comparison (one row per node,
     * Σd⁺ = m elements — 12 M at sf1), so while it fits executor

@@ -64,7 +64,7 @@ object TopKStrategy extends SparkStrategy {
   }
 }
 
-/** Register via `SparkSession.builder().withExtensions(new GraftExtensions)`
+/** Register on a session builder via `withExtensions(new GraftExtensions)`
   * — or after the fact with [[GraftExtensions.install]] (the experimental
   * hooks), which lets graft accelerate sessions it did not create. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -3,7 +3,7 @@ package graft.tools
 import graft.Tables
 import graft.operators.{IvfAnn, PqAnn}
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The ANN recall-vs-cost sweep behind q_ann_tuned: runs every lane
@@ -19,13 +19,7 @@ import org.apache.spark.sql.functions._
 object AnnTune {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-anntune")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.get()
     import spark.implicits._
 
     val e = Tables.embeddings(spark, dir)

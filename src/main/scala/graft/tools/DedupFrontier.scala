@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Broadcast-cutoff frontier probe for the LSH verify fetch.
@@ -31,14 +30,7 @@ object DedupFrontier {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val variants = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(35, 70)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-dedup-frontier")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietKnownNoise()
+    val spark = graft.Session.get()
     import spark.implicits._
 
     val src = graft.Tables.documents(spark, sfDir).select($"doc_id", $"text")
@@ -60,9 +52,7 @@ object DedupFrontier {
       println(f"frontier: nVariants=$nV%3d cand=$candCount%d " +
         f"lane=${if (slim) "broadcast" else "hash-join"} $secs%.1f s " +
         f"(${secs * 1e9 / math.max(candCount, 1)}%.0f ns/cand)")
-      spark.catalog.clearCache()
-      graft.operators.OpCaches.releaseAll()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.Session.release(spark)
       System.gc()
     }
     spark.stop()

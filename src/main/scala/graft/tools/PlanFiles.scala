@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Write `.explain("formatted")` output for named SparkEntry queries to
@@ -10,10 +9,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * Args: <outDir> <tag> <query>[,<query>...] [dataDir]
   * Writes <outDir>/<query>_<tag>.txt for each query.
   *
-  * Session confs mirror Bench's (maxPartitionBytes, codegen cache,
-  * maxResultSize) so the dumped plan is the plan the gate runs;
-  * maxMetadataStringLength is raised so PushedFilters/ReadSchema lines
-  * are not truncated (the r13 PlanSpec lesson).
+  * Runs in the shared [[graft.Session]] so the dumped plan is the plan
+  * the gate runs; maxMetadataStringLength is raised so PushedFilters/
+  * ReadSchema lines are not truncated (the r13 PlanSpec lesson).
   */
 object PlanFiles {
   def main(args: Array[String]): Unit = {
@@ -23,17 +21,8 @@ object PlanFiles {
     val tag = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.maxResultSize", "8g")
-      .config("spark.sql.files.maxPartitionBytes", "33554432")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.sql.maxMetadataStringLength", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.get(graft.Session.builder()
+      .config("spark.sql.maxMetadataStringLength", "4096"))
     names.foreach { q =>
       val df = graft.SparkEntry.queries(q)(spark, dir)
       val txt = df.queryExecution.explainString(FormattedMode)
@@ -41,10 +30,7 @@ object PlanFiles {
       java.nio.file.Files.write(f.toPath, txt.getBytes("UTF-8"))
       println(s"[planfiles] wrote ${f.getPath} (${txt.length} chars)")
       // release anything the query pinned while building its plan
-      spark.catalog.clearCache()
-      graft.operators.OpCaches.releaseAll()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      graft.operators.Ckpt.clearAll(spark)
+      graft.Session.release(spark)
     }
     spark.stop()
   }

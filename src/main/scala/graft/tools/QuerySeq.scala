@@ -1,12 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Sentinel, Session}
 
 /** Ad-hoc multi-query timer: runs the named SparkEntry queries ONCE
   * each, in order, in one JVM through the Bench noop-sink methodology
   * (construction inside the timed window, cache teardown between
   * queries) — for A/B-ing a shared-derivation change across the set of
-  * queries that shares it, without a full Bench run.
+  * queries that shares it, without a full Bench run. Repeat a name
+  * (`q,q,q`) to time its cold and settled runs in one JVM; each run
+  * prints its HotSpot JIT ms, whole-stage-codegen compile count (=
+  * codegen-cache misses) and once-per-JVM build seconds.
   *
   * Args: <q1,q2,...> [dir]
   */
@@ -14,27 +17,7 @@ object QuerySeq {
   def main(args: Array[String]): Unit = {
     val qs = args(0).split(',').toSeq
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r18 (ADVICE): match Bench/Verify's 8g headroom (triangle lane's
-      // broadcast-adjacency collect) so brackets stay config-identical
-      .config("spark.driver.maxResultSize", "8g")
-      // 32 MB scan splits (r17, measured A/B - see Bench): builder
-      // brackets must measure the same scan fan-out the gate runs
-      .config("spark.sql.files.maxPartitionBytes", "33554432")
-      // static conf: the 100-entry default codegen cache recompiles
-      // stage-rich lanes every execution (r17; see build.sbt)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // keep codegen class names stable across AQE stage renumbering
-      // so repeat executions hit the codegen cache (r17; see build.sbt)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .appName("graft-queryseq")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietKnownNoise()
+    val spark = Session.get()
     // SPARK_GRAFT_STAGES=1: per-stage wall + executor CPU/GC telemetry
     // for stages over 1 s — the in-bench degradation debugger (r15)
     if (sys.env.contains("SPARK_GRAFT_STAGES"))
@@ -61,36 +44,32 @@ object QuerySeq {
       gcBeans.forEach(b => s += b.getCollectionTime)
       s
     }
-    def codeCacheMb: String = {
-      val b = new StringBuilder
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.forEach { p =>
-        if (p.getName.contains("CodeHeap") || p.getName.contains("Code Cache"))
-          b ++= f"${p.getName.replace("CodeHeap '", "").replace("'", "")}=" +
-            f"${p.getUsage.getUsed / 1048576}%d/${p.getUsage.getMax / 1048576}%dM "
-      }
-      b.toString
-    }
     var total = 0.0
     qs.foreach { q =>
       val g0 = gcMs
+      val jit0 = Sentinel.jitMs()
+      val cg0 = Sentinel.codegenCompiles()
+      val b0 = graft.operators.BuildMeter.seconds
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(q)(spark, dir)
         .write.format("noop").mode("overwrite").save()
       val s = (System.nanoTime() - t0) / 1e9
       total += s
-      println(f"[queryseq] $q%-24s $s%8.2f s  (driver gc ${(gcMs - g0) / 1000.0}%5.1f s; $codeCacheMb)")
-      // full Bench-order teardown (r18): the first sf10 watchlist sweep
-      // ran 14 heavy queries in one JVM with only unpersist+releaseAll —
+      // jit_ms reads "null" on a JVM without compilation-time monitoring
+      val jitD = Sentinel.jitDeltaJson(jit0, Sentinel.jitMs())
+      val cgD = Sentinel.codegenCompiles() - cg0
+      val bD = graft.operators.BuildMeter.seconds - b0
+      val (ccU, ccM) = Sentinel.codeCacheMb()
+      println(f"[queryseq] $q%-24s $s%8.2f s  (build $bD%.3f s; " +
+        f"jit_ms=$jitD codegen_compiles=$cgD; driver gc ${(gcMs - g0) / 1000.0}%5.1f s; " +
+        f"code cache $ccU%.0f/$ccM%.0f MB)")
+      // full Bench teardown (r18): the first sf10 watchlist sweep ran 14
+      // heavy queries in one JVM with only unpersist+releaseAll —
       // iterative lanes' checkpoint generations and dead broadcast/
       // shuffle debris accumulated until the tail lanes measured the
       // debris, not themselves (q_wand's second run read 2.5× its
-      // first). Same sequence as Bench.cleanup(): release caches,
-      // unpersist, reclaim loop-checkpoint files, one explicit GC so the
-      // ContextCleaner's weak refs actually fire.
-      spark.catalog.clearCache()
-      graft.operators.OpCaches.releaseAll()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      graft.operators.Ckpt.clearAll(spark)
+      // first). One explicit GC so the ContextCleaner's weak refs fire.
+      Session.release(spark)
       System.gc()
     }
     println(f"[queryseq] TOTAL ${total}%.2f s")

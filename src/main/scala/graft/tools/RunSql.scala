@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc SQL timer for plan experiments: registers the test tables from
   * a data dir as temp views, runs one SQL statement N times through the
@@ -11,13 +10,7 @@ object RunSql {
     val dir = args(0)
     val n = args(1).toInt
     val sql = args(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-runsql")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.get()
     graft.Tables.registerAll(spark, dir)
     for (i <- 1 to n) {
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -35,14 +34,7 @@ object StreamSoak {
     val sfDir = if (args.length > 0) args(0) else "tmp/sf10"
     val nBatches = if (args.length > 1) args(1).toInt else 12
     val batchRows = if (args.length > 2) args(2).toInt else 100000
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-stream-soak")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietKnownNoise()
+    val spark = graft.Session.get()
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Scale study for the batched triangle closure: times
   * Triangles.perNode at a given dir and batch count, reporting the
@@ -11,13 +10,7 @@ object TriangleScale {
     val dir = args(0)
     val batches = args(1).toInt
     val n = if (args.length > 2) args(2).toInt else 1
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-trianglescale")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.get()
     import spark.implicits._
     for (i <- 1 to n) {
       val t0 = System.nanoTime()
@@ -29,9 +22,7 @@ object TriangleScale {
         .head().getLong(0)
       println(f"trianglescale: dir=$dir batches=$batches run$i " +
         f"${(System.nanoTime() - t0) / 1e9}%.3f s checksum=$sum")
-      graft.operators.OpCaches.releaseAll()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.Session.release(spark)
       System.gc()
     }
   }
